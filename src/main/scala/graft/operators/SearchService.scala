@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 import graft.TypedApi.ScoredPoint
 
 /** The reference's read/write lifecycle as one object — the batch-engine
@@ -32,7 +33,14 @@ import graft.TypedApi.ScoredPoint
   * blunt flush-on-apply, whose cache is version-oblivious and has no
   * other way to stay correct). An EVENTUAL read that legitimately
   * serves an older version hits that version's own entries. Entries of
-  * a version that leaves retention are flushed (scoped O-7).
+  * a version that leaves retention are flushed (scoped O-7), and its
+  * warmed copy, if [[warm]] made one, is unpersisted.
+  *
+  * RESIDENT SLOT: the service owns one driver-resident copy, the
+  * (snapshot, [[ServeLoop]]) most recently opened for it. Every
+  * [[ResidentServing]] handle takes its loop from the slot, so a handle
+  * and the service share one copy, and [[batchSearch]] answers the
+  * cache misses of a snapshot the slot holds in-process.
   */
 final class SearchService(
     initial: DataFrame,
@@ -57,6 +65,12 @@ final class SearchService(
   // the initial load counts — it IS the warm copy at startup
   private val materialized = scala.collection.mutable.TreeSet[Long](0L)
   private var commitIndex: Long = 0L
+  // versions whose retained plan is the copy warm() persisted
+  private val warmed = scala.collection.mutable.Set[Long]()
+  // the resident slot (class scaladoc); read without a lock by
+  // batchSearch, replaced under slotLock so concurrent opens fold
+  @volatile private var slot: SearchService.Resident = _
+  private val slotLock = new Object
 
   /** Exact top-k with memoization under a consistency level.
     * Returns (hits, servedFromCache). */
@@ -105,12 +119,22 @@ final class SearchService(
     * nothing (the reference clears the response list). On the leader
     * every level serves.
     *
-    * Execution is Spark-first, not the reference's per-request OpenMP
-    * loop (`src/index/shard_manager.cc:61-78`): after per-member cache
-    * lookups, the misses are grouped by (resolved snapshot, k) and each
-    * group runs as ONE [[Knn.batchTopKChunked]] pass over that snapshot
-    * — the batch is data, and arbitrary widths stay broadcast-sized.
-    * Returns per-member (hits, servedFromCache) in request order. */
+    * Execution: after per-member cache lookups, the misses are grouped
+    * by (resolved snapshot, k), and each group runs as ONE pass over
+    * that snapshot:
+    *  - RESIDENT when the service's resident slot holds the group's
+    *    snapshot (a [[ResidentServing]] handle opened it) and the copy
+    *    is within `graft.serveLoopMaxRows`: one [[ServeLoop.searchBatch]]
+    *    call, in-process like the reference's loaded-shard loop
+    *    (`src/index/shard_manager.cc:61-78`) — no Spark job;
+    *  - SPARK otherwise — nothing is loaded for that snapshot (e.g. a
+    *    relaxed read resolving to an older version than the slot's), or
+    *    the snapshot is above the residency cap: one
+    *    [[Knn.batchTopKChunked]] pass, where the batch is data and
+    *    arbitrary widths stay broadcast-sized.
+    * Both give the same values. batchSearch never opens a resident copy
+    * itself. Returns per-member (hits, servedFromCache) in request
+    * order. */
   def batchSearch(requests: Seq[BatchQuery])
       : Either[String, Seq[(Seq[ScoredPoint], Boolean)]] = {
     if (!leader && requests.exists(_.level == Strong))
@@ -134,22 +158,33 @@ final class SearchService(
     val computed = scala.collection.mutable.Map[Int, Seq[ScoredPoint]]()
     missIdx.groupBy(i => (resolved(i)._2, resolved(i)._1.k)).foreach {
       case ((snap, k), idxs) =>
-        // STRONG resolves to the commit index, which is always retained
-        // at resolution time, so the plan was captured above
-        val state = resolved(idxs.head)._3.getOrElse(
-          sys.error(s"snapshot $snap not retained"))
-        val sp = state.sparkSession
-        import sp.implicits._
-        val qdf = idxs.map(i => (i.toLong, resolved(i)._1.query)).toDF("query_id", "qvec")
-        // the batch came from a local collection — its width is known, so
-        // batchTopKChunked skips the count job AND the localCheckpoint
-        val byQuery = Knn.batchTopKChunked(state, qdf, k, idCol = idCol,
-          embCol = embCol, knownWidth = Some(idxs.size.toLong))
-          .orderBy("query_id", "rank").collect()
-          .map(r => (r.getLong(0).toInt, ScoredPoint(r.getLong(1), r.getDouble(2), "")))
-          .groupBy(_._1).map { case (i, rows) => (i, rows.map(_._2).toSeq) }
-        idxs.foreach { i =>
-          val hits = byQuery.getOrElse(i, Nil)
+        val queries = idxs.map(i => resolved(i)._1.query)
+        val res = slot
+        // an off-dimension query keeps the distributed semantics
+        val resident = if (res == null || res.snap != snap) None
+          else res.loop.filter(l => l.size <= ServeLoop.maxRows &&
+            queries.forall(_.length == l.dim))
+        val hitsPerMember: Seq[Seq[ScoredPoint]] = resident match {
+          case Some(loop) => loop.searchBatch(queries, k)
+          case None =>
+            // STRONG resolves to the commit index, which is always
+            // retained at resolution time, so the plan was captured above
+            val state = resolved(idxs.head)._3.getOrElse(
+              sys.error(s"snapshot $snap not retained"))
+            val sp = state.sparkSession
+            import sp.implicits._
+            val qdf = queries.zipWithIndex.map { case (q, j) => (j.toLong, q) }
+              .toDF("query_id", "qvec")
+            // the batch came from a local collection — its width is known,
+            // so batchTopKChunked skips the count job AND the localCheckpoint
+            val byQuery = Knn.batchTopKChunked(state, qdf, k, idCol = idCol,
+              embCol = embCol, knownWidth = Some(idxs.size.toLong))
+              .orderBy("query_id", "rank").collect()
+              .map(r => (r.getLong(0).toInt, ScoredPoint(r.getLong(1), r.getDouble(2), "")))
+              .groupBy(_._1).map { case (j, rows) => (j, rows.map(_._2).toSeq) }
+            queries.indices.map(j => byQuery.getOrElse(j, Nil))
+        }
+        idxs.zip(hitsPerMember).foreach { case (i, hits) =>
           computed(i) = hits
           memo.insert(resolved(i)._1.query, k, hits, snap)
         }
@@ -181,15 +216,21 @@ final class SearchService(
     snapshots(commitIndex) = next
     while (snapshots.size > maxSnapshots) {
       val oldest = snapshots.firstKey
-      snapshots -= oldest
+      val plan = snapshots.remove(oldest).get
       materialized -= oldest
       memo.invalidateSnapshot(oldest) // entries are unreachable now
+      // free the copy warm() persisted; later versions' own warmed copies
+      // are already loaded and stay cached
+      if (warmed.remove(oldest)) graft.sources.VectorStore.invalidate(plan)
     }
   }
 
   /** O-8 warm: pin the current version in executor memory. */
   def warm(): Unit = synchronized {
-    snapshots(commitIndex) = graft.sources.VectorStore.warm(snapshots(commitIndex))
+    val plan = snapshots(commitIndex)
+    // a plan cached before warm() saw it is its owner's to unpersist
+    if (plan.storageLevel == StorageLevel.NONE) warmed += commitIndex
+    snapshots(commitIndex) = graft.sources.VectorStore.warm(plan)
     materialized += commitIndex
   }
 
@@ -220,6 +261,29 @@ final class SearchService(
       (s, snapshots(s))
     }
 
+  /** The resident copy of the snapshot a read at `level` resolves to:
+    * `held` (the caller's current copy) when it is that snapshot, else
+    * the slot's, else a fresh open that replaces the slot. Resolves
+    * under ONE service lock: a second resolution lets a concurrent
+    * [[warm]] take the lock in between, which moves the reopen behind
+    * the warm from one write to the next. Serialized:
+    * concurrent handles wanting the same snapshot share one open and
+    * one copy. Lookups never wait on it; [[batchSearch]] reads the slot
+    * without the lock. */
+  private[operators] def residentFor(level: Consistency,
+      held: SearchService.Resident): SearchService.Resident =
+    slotLock.synchronized {
+      val (snap, state) = resolvedState(level)
+      val cur = slot
+      if (held != null && held.snap == snap) held
+      else if (cur != null && cur.snap == snap) cur
+      else {
+        val next = new SearchService.Resident(snap, ServeLoop.open(state, idCol, embCol))
+        slot = next
+        next
+      }
+    }
+
   /** Open a driver-RESIDENT serve loop over the snapshot a read at
     * `level` would serve (the reference's loaded-shard model —
     * [[ServeLoop]] scaladoc): results are value-identical to [[search]]
@@ -229,7 +293,8 @@ final class SearchService(
     * The loop is a point-in-time resident copy: mutations applied
     * after `residentLoop` returns are served by a REOPENED loop (the
     * reference reloads shards the same way — or use [[residentServing]]
-    * for the self-reopening handle). */
+    * for the self-reopening handle). The loop is its own copy, not the
+    * resident slot the handles share, so [[batchSearch]] does not use it. */
   def residentLoop(level: Consistency = Strong): Option[ServeLoop] =
     ServeLoop.open(resolvedState(level)._2, idCol, embCol)
 
@@ -243,10 +308,11 @@ final class SearchService(
     * advances. STRONG tracks the watermark on every lookup; EVENTUAL /
     * BOUNDED may keep serving the loaded version for up to
     * `stalenessMillis` between checks (the warm-replica lag the levels
-    * model). */
+    * model). The handle's loop is the service's resident slot, so
+    * [[batchSearch]] serves that snapshot's misses from the same copy. */
   def residentServing(level: Consistency = Strong,
       stalenessMillis: Long = 0L): ResidentServing =
-    new ResidentServing(this, level, stalenessMillis, idCol, embCol)
+    new ResidentServing(this, level, stalenessMillis)
 }
 
 /** Self-reopening resident serve handle — see
@@ -261,22 +327,18 @@ final class SearchService(
 final class ResidentServing private[operators] (
     svc: SearchService,
     level: MutationLog.Consistency,
-    stalenessMillis: Long,
-    idCol: String,
-    embCol: String) {
+    stalenessMillis: Long) {
 
-  private final class Loaded(val snap: Long, val loop: Option[ServeLoop])
-  @volatile private var cur: Loaded = _
+  @volatile private var cur: SearchService.Resident = _
   @volatile private var lastCheckNanos: Long = _
   refresh()
 
   /** Force re-resolution and (if the resolved snapshot advanced)
-    * reopen now. Synchronized: concurrent stale lookups fold into ONE
-    * reopen — the second caller re-reads the already-updated state. */
+    * reopen now, through the service's resident slot. Synchronized:
+    * concurrent stale lookups fold into ONE reopen — the second caller
+    * re-reads the already-updated state. */
   def refresh(): Unit = synchronized {
-    val (snap, state) = svc.resolvedState(level)
-    if (cur == null || cur.snap != snap)
-      cur = new Loaded(snap, ServeLoop.open(state, idCol, embCol))
+    cur = svc.residentFor(level, cur)
     lastCheckNanos = System.nanoTime()
   }
 
@@ -299,6 +361,10 @@ final class ResidentServing private[operators] (
 }
 
 object SearchService {
+  /** One resident copy: the snapshot index and its loop (None above the
+    * residency cap or for a degenerate snapshot — see [[ServeLoop.open]]). */
+  private[operators] final class Resident(val snap: Long, val loop: Option[ServeLoop])
+
   /** One member of a [[SearchService.batchSearch]] batch; STRONG default
     * mirrors the proto's zero value (`proto/search.proto:8-12`). */
   final case class BatchQuery(query: Seq[Float], k: Int,

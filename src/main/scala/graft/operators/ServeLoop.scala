@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import graft.TypedApi.ScoredPoint
 
 /** Driver-RESIDENT exact k-NN serving over a loaded snapshot — the
@@ -43,6 +45,7 @@ import graft.TypedApi.ScoredPoint
   * (null distance), and a resident loop must not silently diverge. */
 final class ServeLoop private[operators] (
     ids: Array[Long], flat: Array[Float], val dim: Int) {
+  import ServeLoop.BoundedTopK
 
   /** Loaded corpus size in rows. */
   val size: Int = ids.length
@@ -121,11 +124,7 @@ final class ServeLoop private[operators] (
         var s = 0
         while (s < slices) { scanSlice(s); s += 1 }
       }
-      // merge: concatenate slice tops (≤ slices·k rows), total-order sort
-      val merged = sliceTops.iterator.flatMap(_.rows).toArray
-      java.util.Arrays.sort(merged, ServeLoop.byDistThenId)
-      merged.iterator.take(kk)
-        .map(e => ScoredPoint(e._2, e._1, "")).toSeq
+      ServeLoop.merge(sliceTops.iterator, kk)
     } finally inFlight.decrementAndGet()
     } // DriverMeter.time
   }
@@ -133,21 +132,93 @@ final class ServeLoop private[operators] (
   /** Batch serve — the resident analog of the reference's BatchSearch
     * (`src/rpc/search_service_impl.cc:53-62`, minus the consistency
     * routing, which lives in [[SearchService]]): answers every member
-    * against THIS loop's snapshot, results per member value-identical
-    * to [[search]] (and so to `SearchService.batchSearch` at the same
-    * snapshot — ServeLoopSpec pins it). Members fan out on the common
-    * pool; past saturation each member's scan runs sequentially (the
-    * measured c=64 regime — [[inFlight]] flips the mode per call), so
-    * batch throughput IS the concurrent-caller throughput. */
+    * against THIS loop's snapshot in ONE pass over the corpus. Each
+    * slice reads each of its rows once and folds every member's
+    * distance from it — the same `(double)xᵢ − (double)qᵢ` square sum
+    * in document order as [[search]] — into a bounded heap per
+    * (slice, member); each member's slice heaps then merge by
+    * (distance, id). Results per member are value-identical to
+    * [[search]] (and so to `SearchService.batchSearch` at the same
+    * snapshot — ServeLoopSpec pins both, ties included). Members are
+    * folded four at a time: four independent accumulator chains per
+    * row, each still summed in its own member's document order. Slices
+    * fan out on the common pool while cores are idle and run
+    * sequentially past saturation ([[inFlight]], as in [[search]]).
+    * [[SearchService.batchSearch]] routes a group of cache misses here
+    * when its resident slot holds the group's snapshot. */
   def searchBatch(queries: Seq[Seq[Float]], k: Int,
       filter: Long => Boolean = null): Seq[Seq[ScoredPoint]] = {
     if (queries.isEmpty) return Nil
-    val qarr = queries.toIndexedSeq
-    val out = new Array[Seq[ScoredPoint]](qarr.length)
-    java.util.stream.IntStream.range(0, qarr.length).parallel()
-      .forEach(i => out(i) = search(qarr(i), k, filter))
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+    val m = queries.length
+    if (k <= 0) return Seq.fill(m)(Nil)
+    val qs: Array[Array[Double]] = queries.iterator.map { q =>
+      require(q.length == dim,
+        s"query dimension ${q.length} != corpus dimension $dim")
+      q.iterator.map(_.toDouble).toArray
+    }.toArray
+    val kk = math.min(k, size)
+    graft.util.DriverMeter.time {
+    val depth = inFlight.incrementAndGet()
+    try {
+      // sliceTops(s)(i): member i's top-k over slice s
+      val sliceTops = new Array[Array[BoundedTopK]](slices)
+      def scanSlice(s: Int): Unit = {
+        val tops = Array.fill(m)(new BoundedTopK(kk))
+        var r = bounds(s)
+        val end = bounds(s + 1)
+        while (r < end) {
+          val id = ids(r)
+          if (filter == null || filter(id)) {
+            val base = r * dim
+            var i = 0
+            while (i + 4 <= m) {
+              val q0 = qs(i); val q1 = qs(i + 1); val q2 = qs(i + 2); val q3 = qs(i + 3)
+              var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+              var j = 0
+              while (j < dim) {
+                val x = flat(base + j).toDouble
+                val d0 = x - q0(j); a0 += d0 * d0
+                val d1 = x - q1(j); a1 += d1 * d1
+                val d2 = x - q2(j); a2 += d2 * d2
+                val d3 = x - q3(j); a3 += d3 * d3
+                j += 1
+              }
+              tops(i).offer(a0, id); tops(i + 1).offer(a1, id)
+              tops(i + 2).offer(a2, id); tops(i + 3).offer(a3, id)
+              i += 4
+            }
+            while (i < m) {
+              val q = qs(i)
+              var acc = 0.0
+              var j = 0
+              while (j < dim) {
+                val d = flat(base + j).toDouble - q(j)
+                acc += d * d
+                j += 1
+              }
+              tops(i).offer(acc, id)
+              i += 1
+            }
+          }
+          r += 1
+        }
+        sliceTops(s) = tops
+      }
+      if (depth < slices)
+        java.util.stream.IntStream.range(0, slices).parallel()
+          .forEach(s => scanSlice(s))
+      else {
+        var s = 0
+        while (s < slices) { scanSlice(s); s += 1 }
+      }
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        Array.tabulate(m)(i => ServeLoop.merge(sliceTops.iterator.map(_(i)), kk)))
+    } finally inFlight.decrementAndGet()
+    } // DriverMeter.time
   }
+}
+
+object ServeLoop {
 
   /** One bounded worst-first heap: keeps the k smallest (dist, id)
     * pairs seen. Plain binary heap on arrays — no boxing in offer's
@@ -186,15 +257,20 @@ final class ServeLoop private[operators] (
     def rows: Iterator[(Double, Long)] =
       (0 until n).iterator.map(i => (ds(i), is(i)))
   }
-}
-
-object ServeLoop {
 
   private val byDistThenId = new java.util.Comparator[(Double, Long)] {
     override def compare(a: (Double, Long), b: (Double, Long)): Int = {
       val c = java.lang.Double.compare(a._1, b._1)
       if (c != 0) c else java.lang.Long.compare(a._2, b._2)
     }
+  }
+
+  /** Merge per-slice tops: concatenate (≤ slices·k rows), total-order
+    * sort by (distance, id), keep the first k. */
+  private def merge(sliceTops: Iterator[BoundedTopK], k: Int): Seq[ScoredPoint] = {
+    val merged = sliceTops.flatMap(_.rows).toArray
+    java.util.Arrays.sort(merged, byDistThenId)
+    merged.iterator.take(k).map(e => ScoredPoint(e._2, e._1, "")).toSeq
   }
 
   /** Residency cap in rows — above it `open` returns None and callers
@@ -206,21 +282,33 @@ object ServeLoop {
     * (`limit(cap+1)` keeps the job and the driver allocation capped
     * even against an over-cap corpus; the cap itself is clamped so the
     * probe limit can never overflow Int for a caller configuring
-    * Int.MaxValue); None above the cap or when any row — or any
-    * ELEMENT inside an embedding array — is null or off-dimension:
-    * the distributed path defines null-element distance as null
+    * Int.MaxValue); None above the cap, for an embedding column that
+    * is not array<float>, or when any row — or any ELEMENT inside an
+    * embedding array — is null or off-dimension: the distributed path
+    * defines null-element distance as null
     * ([[graft.expressions.L2SquaredDistance]]), so degenerate rows
-    * must fall back to distributed semantics, not throw. */
+    * must fall back to distributed semantics, not throw.
+    *
+    * The collect keeps Spark's internal rows: floats copy straight out
+    * of each row's bytes into the flat array. Converting to external
+    * Rows first boxes every element, which at 200 k × 64 costs as much
+    * as the collect itself, and a resident handle reopens after every
+    * write. */
   def open(state: DataFrame, idCol: String = "id",
       embCol: String = "embedding",
       cap: Int = maxRows): Option[ServeLoop] = {
     val capc = math.min(math.max(cap, 0), Int.MaxValue - 8)
-    val rows = state.select(col(idCol).cast("long"), col(embCol))
-      .limit(capc + 1).collect()
+    val q = state.select(col(idCol).cast("long"), col(embCol)).limit(capc + 1)
+    q.schema(1).dataType match {
+      case ArrayType(FloatType, _) =>
+      case _ => return None
+    }
+    val qe = q.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
     if (rows.length > capc || rows.isEmpty) return None
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val first = rows(0).getSeq[Any](1)
-    val dim = first.length
+    val dim = rows(0).getArray(1).numElements()
     val n = rows.length
     // flat-array addressability: n·dim must fit one JVM array (a 4 M ×
     // 768 corpus does not — the row cap alone is not the whole bound)
@@ -230,18 +318,15 @@ object ServeLoop {
     var r = 0
     while (r < n) {
       val row = rows(r)
-      // read elements as boxed values: an array<float> row can carry
-      // null ELEMENTS, and unboxing one throws instead of falling back
-      val emb = row.getSeq[Any](1)
-      if (emb.length != dim) return None
+      val emb = row.getArray(1)
+      if (emb.numElements() != dim) return None
       ids(r) = row.getLong(0)
+      val base = r * dim
       var j = 0
-      val it = emb.iterator
-      while (it.hasNext) {
-        it.next() match {
-          case f: java.lang.Float => flat(r * dim + j) = f.floatValue()
-          case _ => return None // null (or non-float) element
-        }
+      while (j < dim) {
+        // an array<float> can carry null ELEMENTS; getFloat would read 0
+        if (emb.isNullAt(j)) return None
+        flat(base + j) = emb.getFloat(j)
         j += 1
       }
       r += 1

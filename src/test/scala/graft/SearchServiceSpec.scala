@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.SearchService
+import graft.operators.{MutationLog, SearchService}
 
 /** The reference's Search/Upsert/Delete lifecycle semantics end-to-end
   * (SURVEY.md §3.1/§3.2): cache hit flags, invalidate-on-mutation, k=0
@@ -155,6 +155,115 @@ class SearchServiceSpec extends SparkSpec {
     svc.setLeader(true)
     assert(svc.batchSearch(Seq(
       BatchQuery(Seq(0f, 0f), 2, Strong))).isRight)
+  }
+
+  test("a version leaving retention unpersists its warmed copy; reads keep their values") {
+    import graft.operators.MutationLog.{BoundedStaleness, Eventual, Strong}
+    val sc = spark.sparkContext
+    val maxSnapshots = 4
+    val rounds = maxSnapshots + 3
+    def row(i: Int) = Seq((100L + i, "s0", Seq(0f, 1f / (i + 1))))
+      .toDF("id", "shard_id", "embedding")
+    def service = new SearchService(
+      Seq((1L, "s0", Seq(0f, 2f)), (2L, "s0", Seq(1f, 0f)), (3L, "s1", Seq(2f, 2f)))
+        .toDF("id", "shard_id", "embedding"), maxSnapshots = maxSnapshots)
+    val warmedSvc = service
+    // twin: same versions, materialized by reads instead of warm(), so
+    // it persists nothing and every level resolves to the same version
+    val twin = service
+    val before = sc.getPersistentRDDs.size
+    (1 to rounds).foreach { i =>
+      warmedSvc.upsert(row(i)); warmedSvc.warm()
+      twin.upsert(row(i)); twin.search(Seq(9f, 9f), 1)
+    }
+    assert(sc.getPersistentRDDs.size - before <= maxSnapshots)
+    // one more version, neither warmed nor read: relaxed reads resolve
+    // to the last warmed version, whose ancestors were unpersisted
+    warmedSvc.upsert(row(rounds + 1)); twin.upsert(row(rounds + 1))
+    val q = Seq(0f, 0f)
+    // relaxed levels first: the STRONG read materializes the newest version
+    for ((level, newest) <- Seq(Eventual -> rounds, BoundedStaleness(1) -> rounds,
+        Strong -> (rounds + 1))) {
+      val hits = warmedSvc.search(q, 3, level)._1
+      assert(hits === twin.search(q, 3, level)._1, s"level=$level")
+      assert(hits.map(_.id) === Seq(100L + newest, 100L + newest - 1, 100L + newest - 2),
+        s"level=$level")
+    }
+    // a frame the caller cached before warm() stays cached when its
+    // version leaves retention: only the service's own copies are freed
+    val own = Seq((1L, "s0", Seq(0f, 2f))).toDF("id", "shard_id", "embedding").cache()
+    own.count()
+    val keeper = new SearchService(own, maxSnapshots = 2)
+    keeper.warm()
+    (1 to 3).foreach { i => keeper.upsert(row(i)); keeper.warm() }
+    assert(own.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
+    own.unpersist()
+  }
+
+  test("batchSearch from the resident slot ≡ a service with no resident handle") {
+    import graft.operators.MutationLog.{Eventual, Strong}
+    import SearchService.BatchQuery
+    val sc = spark.sparkContext
+    // equidistant pairs (ids 2/4, 5/6) keep the tie-break load-bearing
+    val rows = Seq((1L, Seq(0f, 0f)), (2L, Seq(1f, 0f)), (4L, Seq(-1f, 0f)),
+      (3L, Seq(2f, 2f)), (5L, Seq(0f, 3f)), (6L, Seq(0f, -3f)))
+    def service = new SearchService(
+      rows.map { case (id, e) => (id, "s0", e) }.toDF("id", "shard_id", "embedding"))
+    def up(id: Long, e: Seq[Float]) = Seq((id, "s0", e)).toDF("id", "shard_id", "embedding")
+    val queries = Seq(Seq(0f, 0f), Seq(0.5f, 0.5f), Seq(2f, 2f), Seq(0f, 1f), Seq(-3f, 0f))
+    def batch(level: MutationLog.Consistency, k: Int) = queries.map(BatchQuery(_, k, level))
+    /** Jobs batchSearch submitted for `reqs`, and its answers. */
+    def run(svc: SearchService, reqs: Seq[BatchQuery]) = {
+      val group = s"resident-spec-${System.nanoTime()}"
+      sc.setJobGroup(group, group)
+      try {
+        val out = svc.batchSearch(reqs).toOption.get
+        (sc.statusTracker.getJobIdsForGroup(group).length, out)
+      } finally sc.clearJobGroup()
+    }
+    val plain = service
+    val withSlot = service
+    val handle = withSlot.residentServing()
+    plain.upsert(up(7L, Seq(0.25f, 0f))); withSlot.upsert(up(7L, Seq(0.25f, 0f)))
+    assert(handle.search(Seq(0.25f, 0f), 1).get.map(_.id) === Seq(7L)) // slot holds v1
+
+    // all-STRONG misses at the slot's snapshot: served resident, no job
+    val (jobs, strong) = run(withSlot, batch(Strong, 3))
+    assert(jobs === 0)
+    assert(strong === run(plain, batch(Strong, 3))._2)
+    // mixed batch: STRONG resolves to the slot's v2; EVENTUAL to v1, the
+    // newest version a read materialized, which has no resident copy
+    plain.upsert(up(8L, Seq(5f, 5f))); withSlot.upsert(up(8L, Seq(5f, 5f)))
+    handle.refresh() // slot holds v2, which no read has materialized
+    val mixed = batch(Strong, 2) ++ batch(Eventual, 4)
+    val (mixedJobs, got) = run(withSlot, mixed)
+    assert(mixedJobs > 0) // the EVENTUAL group went to Spark
+    assert(got === run(plain, mixed)._2)
+    assert(got.drop(queries.size).head._1.map(_.id) === Seq(1L, 7L, 2L, 4L)) // v1
+
+    // right after an upsert, before the handle reopens: STRONG resolves
+    // to v3 and must not be served from the v2 slot
+    plain.upsert(up(9L, Seq(0f, 0.1f))); withSlot.upsert(up(9L, Seq(0f, 0.1f)))
+    assert(handle.snapshot === 2L)
+    val (_, fresh) = run(withSlot, batch(Strong, 5))
+    assert(fresh === run(plain, batch(Strong, 5))._2)
+    assert(fresh.head._1.map(_.id).take(2) === Seq(1L, 9L))
+
+    // above a lowered residency cap: the Spark path serves
+    handle.refresh() // slot holds v3, loaded under the default cap
+    sys.props("graft.serveLoopMaxRows") = "4"
+    try {
+      val (capJobs, capped) = run(withSlot, batch(Strong, 6))
+      assert(capJobs > 0)
+      assert(capped === run(plain, batch(Strong, 6))._2)
+      // a handle opened under the lowered cap holds no loop at all
+      val over = service
+      val overHandle = over.residentServing()
+      assert(overHandle.search(Seq(0f, 0f), 1).isEmpty)
+      val (overJobs, overGot) = run(over, batch(Strong, 6))
+      assert(overJobs > 0)
+      assert(overGot === run(service, batch(Strong, 6))._2)
+    } finally sys.props -= "graft.serveLoopMaxRows"
   }
 
   test("delete removes from results after invalidation") {

@@ -61,6 +61,9 @@ class ServeLoopSpec extends SparkSpec {
       spark.sql("SELECT CAST(99 AS BIGINT) AS id, " +
         "array(CAST(1.0 AS FLOAT), CAST(NULL AS FLOAT)) AS embedding"))
     assert(ServeLoop.open(nullElem).isEmpty)
+    // only array<float> loads: a double-typed embedding declines too
+    assert(ServeLoop.open(corpus.withColumn("embedding",
+      $"embedding".cast("array<double>"))).isEmpty)
     // an Int.MaxValue cap must not overflow the probe limit (ADVICE
     // r17 #3): the open succeeds (corpus is tiny), never throws
     assert(ServeLoop.open(corpus, cap = Int.MaxValue).isDefined)
@@ -95,6 +98,33 @@ class ServeLoopSpec extends SparkSpec {
       assert(hits === expect(i % queries.size))
     }
     assert(loop.searchBatch(Nil, 3) === Nil)
+  }
+
+  test("one-pass searchBatch ≡ per-member search: ties, k > N, wide batch, filter") {
+    // several slices (≥ 1,024 rows each), every vector drawn from a
+    // 3^3 grid so equal distances are everywhere and the (distance, id)
+    // tie-break decides most ranks
+    val rnd = new scala.util.Random(20261017L)
+    val n = 6000
+    val vecs = (0 until n).map(i =>
+      (i * 3L + 1, Seq.fill(3)((rnd.nextInt(3) - 1).toFloat)))
+    val loop = ServeLoop.open(vecs.toDF("id", "embedding")).get
+    // wider than the core count and not a multiple of the four-member
+    // fold, so both the blocked and the remainder path run
+    val width = 4 * Runtime.getRuntime.availableProcessors() + 3
+    val batch = Seq.tabulate(width)(i =>
+      if (i % 5 == 0) vecs(i)._2 // a corpus vector: distance-0 ties
+      else Seq.fill(3)((rnd.nextInt(5) - 2) * 0.5f))
+    val oddIds: Long => Boolean = _ % 2 == 1
+    for (k <- Seq(1, 7, n + 10); filter <- Seq(null, oddIds)) {
+      val got = loop.searchBatch(batch, k, filter)
+      assert(got.size === width)
+      got.zip(batch).foreach { case (hits, q) =>
+        assert(hits === loop.search(q, k, filter), s"q=$q k=$k filter=${filter != null}")
+      }
+    }
+    assert(loop.searchBatch(batch, n + 10).forall(_.size === n))
+    assert(loop.searchBatch(batch, 0).forall(_.isEmpty))
   }
 
   test("id-predicate filter ≡ unfiltered loop over the pre-filtered snapshot") {
