@@ -40,7 +40,12 @@ import graft.TypedApi.ScoredPoint
   * (snapshot, [[ServeLoop]]) most recently opened for it. Every
   * [[ResidentServing]] handle takes its loop from the slot, so a handle
   * and the service share one copy, and [[batchSearch]] answers the
-  * cache misses of a snapshot the slot holds in-process.
+  * cache misses of a snapshot the slot holds in-process. Next to each
+  * retained version the service records the write that produced it,
+  * so a copy advances by applying the writes since its snapshot to the
+  * loaded rows — the reference's in-place shard update
+  * (`src/index/shard_manager.cc:80-103`) — instead of collecting the
+  * new version again ([[residentFor]]).
   */
 final class SearchService(
     initial: DataFrame,
@@ -53,6 +58,9 @@ final class SearchService(
   import MutationLog.{Consistency, Strong}
   import SearchService.BatchQuery
 
+  // the current version must stay retained: 0 would evict it on the first write
+  require(maxSnapshots >= 1, s"maxSnapshots must be >= 1, got $maxSnapshots")
+
   private val memo = new QueryMemo[Seq[ScoredPoint]](cacheMaxEntries, cacheTtlMillis)
   // Raft-role flag: the reference gates STRONG reads on leadership
   // (`src/rpc/search_service_impl.cc:10-12,28-31`); the batch engine has
@@ -61,6 +69,9 @@ final class SearchService(
   @volatile private var leader: Boolean = true
   // retained versions: commit index → state plan (current always present)
   private val snapshots = scala.collection.mutable.TreeMap[Long, DataFrame](0L -> initial)
+  // the write that produced each retained version after the first,
+  // pruned with its version: what residentFor applies to a loaded copy
+  private val writes = scala.collection.mutable.TreeMap[Long, ServeLoop.Write]()
   // versions a read has materialized (what relaxed reads may serve);
   // the initial load counts — it IS the warm copy at startup
   private val materialized = scala.collection.mutable.TreeSet[Long](0L)
@@ -203,20 +214,24 @@ final class SearchService(
   /** Upsert batch (delete-then-insert per key); advances the commit
     * index and retains the previous version for relaxed reads. */
   def upsert(updates: DataFrame): Unit = synchronized {
-    advance(MutationLog.applyUpserts(snapshots(commitIndex), updates))
+    advance(MutationLog.applyUpserts(snapshots(commitIndex), updates),
+      ServeLoop.Write(upsert = true, updates))
   }
 
   /** Delete batch; same version bookkeeping as [[upsert]]. */
   def delete(deletes: DataFrame): Unit = synchronized {
-    advance(MutationLog.applyDeletes(snapshots(commitIndex), deletes))
+    advance(MutationLog.applyDeletes(snapshots(commitIndex), deletes),
+      ServeLoop.Write(upsert = false, deletes))
   }
 
-  private def advance(next: DataFrame): Unit = {
+  private def advance(next: DataFrame, write: ServeLoop.Write): Unit = {
     commitIndex += 1
     snapshots(commitIndex) = next
+    writes(commitIndex) = write
     while (snapshots.size > maxSnapshots) {
       val oldest = snapshots.firstKey
       val plan = snapshots.remove(oldest).get
+      writes -= oldest
       materialized -= oldest
       memo.invalidateSnapshot(oldest) // entries are unreachable now
       // free the copy warm() persisted; later versions' own warmed copies
@@ -263,22 +278,40 @@ final class SearchService(
 
   /** The resident copy of the snapshot a read at `level` resolves to:
     * `held` (the caller's current copy) when it is that snapshot, else
-    * the slot's, else a fresh open that replaces the slot. Resolves
-    * under ONE service lock: a second resolution lets a concurrent
-    * [[warm]] take the lock in between, which moves the reopen behind
-    * the warm from one write to the next. Serialized:
-    * concurrent handles wanting the same snapshot share one open and
-    * one copy. Lookups never wait on it; [[batchSearch]] reads the slot
-    * without the lock. */
+    * the slot's, else a new copy that replaces the slot. The new copy
+    * is built from the newer of `held` and the slot when its snapshot
+    * is older than the target and every write in between is still
+    * recorded: [[ServeLoop.applyWrites]] applies them in order to the
+    * loaded rows, and a write from a local collection needs no Spark
+    * job. It falls back to a full [[ServeLoop.open]] of the target plan
+    * when no such copy exists (a write was pruned, the target is older
+    * than the copies) or the delta cannot decide (see applyWrites);
+    * both give the same copy up to row order. Resolves under ONE
+    * service lock: a second resolution lets a concurrent [[warm]] take
+    * the lock in between, which moves the reopen behind the warm from
+    * one write to the next. Serialized: concurrent handles wanting the
+    * same snapshot share one reopen and one copy. Lookups never wait on
+    * it; [[batchSearch]] reads the slot without the lock. */
   private[operators] def residentFor(level: Consistency,
       held: SearchService.Resident): SearchService.Resident =
     slotLock.synchronized {
-      val (snap, state) = resolvedState(level)
       val cur = slot
+      val (snap, state, from) = synchronized {
+        val s = MutationLog.snapshotIndex(commitIndex,
+          materialized.toSeq.filter(snapshots.contains), level)
+        val base = Seq(held, cur)
+          .filter(r => r != null && r.snap < s && r.loop.exists(_.keyed))
+          .maxByOption(_.snap)
+          .filter(r => (r.snap + 1 to s).forall(writes.contains))
+        (s, snapshots(s), base.map(b => (b.loop.get, (b.snap + 1 to s).map(writes))))
+      }
       if (held != null && held.snap == snap) held
       else if (cur != null && cur.snap == snap) cur
       else {
-        val next = new SearchService.Resident(snap, ServeLoop.open(state, idCol, embCol))
+        val loop = from
+          .flatMap { case (b, ws) => ServeLoop.applyWrites(b, ws, state, idCol, embCol) }
+          .getOrElse(ServeLoop.open(state, idCol, embCol))
+        val next = new SearchService.Resident(snap, loop)
         slot = next
         next
       }
@@ -305,7 +338,10 @@ final class SearchService(
     * [[residentLoop]] serves its open-time snapshot forever; this
     * handle checks the resolved snapshot index per lookup (a
     * driver-side metadata read, not a job) and REOPENS when it
-    * advances. STRONG tracks the watermark on every lookup; EVENTUAL /
+    * advances — by applying the writes since its snapshot to the copy
+    * it holds, as the reference updates its loaded shards, with a full
+    * open as the fallback ([[residentFor]]). STRONG tracks the
+    * watermark on every lookup; EVENTUAL /
     * BOUNDED may keep serving the loaded version for up to
     * `stalenessMillis` between checks (the warm-replica lag the levels
     * model). The handle's loop is the service's resident slot, so
@@ -321,6 +357,10 @@ final class SearchService(
   * (SearchServiceSpec pins mutate → STRONG resident read serves
   * post-mutation state with no caller-side reopen; EVENTUAL may serve
   * the old snapshot until its staleness window lapses or [[refresh]]).
+  * A reopen builds the new copy from the held one plus the recorded
+  * writes in between, so a write from a local collection becomes
+  * visible without a Spark job; SearchServiceSpec pins that copy ≡ a
+  * fresh [[SearchService.residentLoop]] at every version.
   * Thread-safe: reopen is serialized, lookups race it benignly (they
   * serve either the old or the new loop — both are valid serves of
   * their own snapshot; STRONG lookups re-check before every scan). */

@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, FloatType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.TypedApi.ScoredPoint
 
 /** Driver-RESIDENT exact k-NN serving over a loaded snapshot — the
@@ -42,9 +45,17 @@ import graft.TypedApi.ScoredPoint
   * Duplicate ids are preserved (the reference's duplicate-id quirk,
   * SURVEY §2); rows whose embedding is null or off-dimension make
   * `open` return None — the distributed path defines their semantics
-  * (null distance), and a resident loop must not silently diverge. */
+  * (null distance), and a resident loop must not silently diverge.
+  *
+  * Each row also keeps its `shard_id` as an int code (`shards`, -1 for
+  * null; `shardCodes` maps the key to its code) when the state has a
+  * string `shard_id` column, so [[ServeLoop.applyWrites]] can apply a
+  * write's `(shard_id, id)` delta to the loaded copy the way the
+  * reference applies it to its loaded shard (`vector_shard.cc:46-57`)
+  * instead of reloading the snapshot. `shards` is null otherwise. */
 final class ServeLoop private[operators] (
-    ids: Array[Long], flat: Array[Float], val dim: Int) {
+    ids: Array[Long], flat: Array[Float], val dim: Int,
+    shards: Array[Int], shardCodes: Map[UTF8String, Int]) {
   import ServeLoop.BoundedTopK
 
   /** Loaded corpus size in rows. */
@@ -216,6 +227,71 @@ final class ServeLoop private[operators] (
     } finally inFlight.decrementAndGet()
     } // DriverMeter.time
   }
+
+  /** Whether rows carry shard codes, so writes can apply to this copy. */
+  private[operators] def keyed: Boolean = shards != null
+
+  /** This copy with one write applied (see [[ServeLoop.applyWrites]],
+    * which checks the column types first); None when the write cannot
+    * be applied to a loaded copy. */
+  private[operators] def applyWrite(w: ServeLoop.Write, embCol: String): Option[ServeLoop] = {
+    val cols = Seq(col(ServeLoop.ShardCol), col("id").cast("long")) ++
+      (if (w.upsert) Seq(col(embCol)) else Nil)
+    val rows = ServeLoop.collectInternal(w.rows.select(cols: _*).limit(size + 1))
+    if (rows.length > size) return None
+    // the write's keys that can match a row of this copy: id → shard codes
+    val codes = new ServeLoop.ShardCodes(shardCodes)
+    val keys = new scala.collection.mutable.LongMap[List[Int]]()
+    var i = 0
+    while (i < rows.length) {
+      val row = rows(i)
+      val c = codes.known(row, 0)
+      if (!row.isNullAt(1) && c >= 0) keys(row.getLong(1)) = c :: keys.getOrElse(row.getLong(1), Nil)
+      if (w.upsert && (row.isNullAt(1) || row.isNullAt(2))) return None
+      i += 1
+    }
+    val dropped = new scala.collection.mutable.ArrayBuilder.ofInt
+    if (keys.nonEmpty) {
+      var r = 0
+      while (r < size) {
+        val s = shards(r)
+        if (s >= 0) {
+          val c = keys.getOrNull(ids(r))
+          if (c != null && c.contains(s)) dropped += r
+        }
+        r += 1
+      }
+    }
+    val drops = dropped.result()
+    val appended = if (w.upsert) rows.length else 0
+    if (drops.isEmpty && appended == 0) return Some(this)
+    val n = size - drops.length + appended
+    if (n.toLong * dim > Int.MaxValue - 8) return None
+    val nIds = new Array[Long](n)
+    val nFlat = new Array[Float](n * dim)
+    val nShards = new Array[Int](n)
+    // kept rows: one run per gap between dropped rows
+    var src = 0
+    var dst = 0
+    var d = 0
+    while (src < size) {
+      val end = if (d < drops.length) drops(d) else size
+      val len = end - src
+      System.arraycopy(ids, src, nIds, dst, len)
+      System.arraycopy(shards, src, nShards, dst, len)
+      System.arraycopy(flat, src * dim, nFlat, dst * dim, len * dim)
+      dst += len; src = end + 1; d += 1
+    }
+    i = 0
+    while (i < appended) {
+      val row = rows(i)
+      if (!ServeLoop.copyEmbedding(row.getArray(2), nFlat, dst * dim, dim)) return None
+      nIds(dst) = row.getLong(1)
+      nShards(dst) = codes.codeOf(row, 0)
+      dst += 1; i += 1
+    }
+    Some(new ServeLoop(nIds, nFlat, dim, nShards, codes.result))
+  }
 }
 
 object ServeLoop {
@@ -292,20 +368,18 @@ object ServeLoop {
     * The collect keeps Spark's internal rows: floats copy straight out
     * of each row's bytes into the flat array. Converting to external
     * Rows first boxes every element, which at 200 k × 64 costs as much
-    * as the collect itself, and a resident handle reopens after every
-    * write. */
+    * as the collect itself. A string `shard_id` column, when the state
+    * has one, is read too and kept as per-row codes (class scaladoc). */
   def open(state: DataFrame, idCol: String = "id",
       embCol: String = "embedding",
       cap: Int = maxRows): Option[ServeLoop] = {
-    val capc = math.min(math.max(cap, 0), Int.MaxValue - 8)
-    val q = state.select(col(idCol).cast("long"), col(embCol)).limit(capc + 1)
-    q.schema(1).dataType match {
-      case ArrayType(FloatType, _) =>
-      case _ => return None
-    }
-    val qe = q.queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
-      qe.executedPlan.executeCollect())
+    val capc = clampCap(cap)
+    val withShard = state.schema.exists(f => f.name == ShardCol && f.dataType == StringType)
+    val cols = Seq(col(idCol).cast("long"), col(embCol)) ++
+      (if (withShard) Seq(col(ShardCol)) else Nil)
+    val q = state.select(cols: _*).limit(capc + 1)
+    if (!isFloatArray(q.schema(1).dataType)) return None
+    val rows = collectInternal(q)
     if (rows.length > capc || rows.isEmpty) return None
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     val dim = rows(0).getArray(1).numElements()
@@ -315,22 +389,111 @@ object ServeLoop {
     if (dim <= 0 || n.toLong * dim > Int.MaxValue - 8) return None
     val ids = new Array[Long](n)
     val flat = new Array[Float](n * dim)
+    val shards = if (withShard) new Array[Int](n) else null
+    val codes = new ShardCodes(Map.empty)
     var r = 0
     while (r < n) {
       val row = rows(r)
-      val emb = row.getArray(1)
-      if (emb.numElements() != dim) return None
+      if (!copyEmbedding(row.getArray(1), flat, r * dim, dim)) return None
       ids(r) = row.getLong(0)
-      val base = r * dim
-      var j = 0
-      while (j < dim) {
-        // an array<float> can carry null ELEMENTS; getFloat would read 0
-        if (emb.isNullAt(j)) return None
-        flat(base + j) = emb.getFloat(j)
-        j += 1
-      }
+      if (withShard) shards(r) = codes.codeOf(row, 2)
       r += 1
     }
-    Some(new ServeLoop(ids, flat, dim))
+    Some(new ServeLoop(ids, flat, dim, shards, codes.result))
+  }
+
+  /** One recorded write: an upsert's rows or a delete's keys
+    * ([[MutationLog.applyUpserts]] / [[MutationLog.applyDeletes]]). */
+  private[operators] final case class Write(upsert: Boolean, rows: DataFrame)
+
+  /** What [[open]] returns on `target`, built from `base` plus the
+    * `writes` that lead from base's snapshot to `target`, in commit
+    * order — no pass over the target plan. Each write replays
+    * [[MutationLog]]'s anti-join + union on the loaded copy: every row
+    * whose `(shard_id, id)` is a key of the write is dropped (duplicate
+    * rows included; null keys never match), then an upsert's rows are
+    * appended (keys repeated inside one upsert all append). Kept rows
+    * copy in runs. Each write collects with `limit(size + 1)`, a delete
+    * only its keys; a write built from a local collection collects
+    * without a Spark job.
+    *
+    * Returns Some(result), where result is None exactly when `open`
+    * would give None for an empty or over-cap copy; None when the
+    * delta cannot decide and the caller must run `open(target)`:
+    * `base` has no shard codes, `idCol` is not `id`, the target's
+    * embedding is not array<float>, a `shard_id` is not a string or an
+    * `id` not an integer type, a write has more rows than the copy, or
+    * an upserted row has a null id, a null embedding, a null element or
+    * the wrong dimension. Row order differs from `open`'s, which no
+    * result sees: every ranking is by (distance, id). */
+  private[operators] def applyWrites(base: ServeLoop, writes: Seq[Write],
+      target: DataFrame, idCol: String, embCol: String,
+      cap: Int = maxRows): Option[Option[ServeLoop]] = {
+    def typeOf(df: DataFrame, name: String): Option[DataType] =
+      df.schema.find(_.name == name).map(_.dataType)
+    // the key types whose equality is the anti-join's
+    def keyTypes(df: DataFrame): Boolean =
+      typeOf(df, ShardCol).contains(StringType) &&
+        typeOf(df, "id").exists(Seq(ByteType, ShortType, IntegerType, LongType).contains)
+    if (!base.keyed || idCol != "id" || !keyTypes(target) ||
+        !typeOf(target, embCol).exists(isFloatArray)) return None
+    var cur = base
+    val it = writes.iterator
+    while (it.hasNext) {
+      val w = it.next()
+      if (!keyTypes(w.rows) || (w.upsert && !typeOf(w.rows, embCol).exists(isFloatArray)))
+        return None
+      cur = cur.applyWrite(w, embCol).getOrElse(return None)
+    }
+    val capc = clampCap(cap)
+    Some(if (cur.size == 0 || cur.size > capc) None else Some(cur))
+  }
+
+  private val ShardCol = "shard_id"
+
+  private def clampCap(cap: Int): Int = math.min(math.max(cap, 0), Int.MaxValue - 8)
+
+  private def isFloatArray(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
+  /** Collect a query's internal rows (see [[open]]); a plan over a local
+    * collection answers from the driver without a job. */
+  private def collectInternal(q: DataFrame): Array[InternalRow] = {
+    val qe = q.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** Copy one embedding into `flat` at `base`; false for a wrong
+    * dimension or a null element (getFloat would read a null as 0). */
+  private def copyEmbedding(emb: ArrayData, flat: Array[Float], base: Int, dim: Int): Boolean = {
+    if (emb.numElements() != dim) return false
+    var j = 0
+    while (j < dim) {
+      if (emb.isNullAt(j)) return false
+      flat(base + j) = emb.getFloat(j)
+      j += 1
+    }
+    true
+  }
+
+  /** Shard key → code, grown while a loop is built; -1 is null. */
+  private final class ShardCodes(start: Map[UTF8String, Int]) {
+    private val m = scala.collection.mutable.HashMap.from(start)
+    def codeOf(row: InternalRow, i: Int): Int =
+      if (row.isNullAt(i)) -1
+      else {
+        val key = row.getUTF8String(i)
+        m.getOrElse(key, {
+          val c = m.size
+          m(key.clone()) = c // the key points into the row's bytes
+          c
+        })
+      }
+    /** The code of a key already known, -1 when unknown or null. */
+    def known(row: InternalRow, i: Int): Int =
+      if (row.isNullAt(i)) -1 else m.getOrElse(row.getUTF8String(i), -1)
+    def result: Map[UTF8String, Int] = m.toMap
   }
 }

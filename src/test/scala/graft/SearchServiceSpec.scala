@@ -266,6 +266,170 @@ class SearchServiceSpec extends SparkSpec {
     } finally sys.props -= "graft.serveLoopMaxRows"
   }
 
+  /** Spark jobs `body` submitted on this thread, and its value. */
+  private def jobsOf[A](body: => A): (Int, A) = {
+    val sc = spark.sparkContext
+    val group = s"search-spec-${System.nanoTime()}"
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      (sc.statusTracker.getJobIdsForGroup(group).length, out)
+    } finally sc.clearJobGroup()
+  }
+
+  private def rowsDF(rows: (Long, String, Seq[Float])*) = rows.toDF("id", "shard_id", "embedding")
+  private def keysDF(keys: (Long, String)*) = keys.toDF("id", "shard_id")
+
+  test("a resident copy advanced by write deltas ≡ a fresh open ≡ the Spark path at every version") {
+    import graft.operators.MutationLog.{Eventual, Strong}
+    import SearchService.BatchQuery
+    val base = rowsDF((1L, "s0", Seq(0f, 0f)), (2L, "s0", Seq(1f, 0f)), (3L, "s1", Seq(2f, 2f)),
+      (4L, "s1", Seq(-1f, 0f)), (5L, "s0", Seq(0f, 3f)), (6L, null, Seq(0f, -3f)))
+    val svc = new SearchService(base)
+    val handle = svc.residentServing(Strong)
+    // twin with the same writes, materialized only by warm(): its
+    // EVENTUAL handle lags, then catches up over several writes at once
+    val twin = new SearchService(base)
+    val eventual = twin.residentServing(Eventual)
+    val queries = Seq(Seq(0f, 0f), Seq(1f, 1f), Seq(2f, 2f), Seq(-1f, 0.5f))
+    val k = 20 // above the corpus size: whole rankings are compared
+    def upsert(rows: (Long, String, Seq[Float])*): Unit = {
+      svc.upsert(rowsDF(rows: _*)); twin.upsert(rowsDF(rows: _*))
+    }
+    def delete(keys: (Long, String)*): Unit = {
+      svc.delete(keysDF(keys: _*)); twin.delete(keysDF(keys: _*))
+    }
+    /** The STRONG handle's answers at the current version. */
+    def check(label: String): Seq[graft.TypedApi.ScoredPoint] = {
+      val (jobs, got) = jobsOf(queries.map(q => handle.search(q, k).get))
+      assert(jobs === 0, s"$label: the reopen ran a Spark job")
+      assert(handle.snapshot === svc.currentCommitIndex, label)
+      val fresh = svc.residentLoop().get
+      queries.zip(got).foreach { case (q, hits) =>
+        assert(hits === fresh.search(q, k), s"$label q=$q")
+        assert(hits === svc.search(q, k)._1, s"$label q=$q (Spark path)")
+      }
+      got.head
+    }
+    def checkEventual(label: String): Unit = {
+      twin.warm()
+      val (jobs, got) = jobsOf(queries.map(q => eventual.search(q, k).get))
+      assert(jobs === 0, s"$label: the reopen ran a Spark job")
+      assert(eventual.snapshot === twin.currentCommitIndex, label)
+      val fresh = twin.residentLoop(Eventual).get
+      queries.zip(got).foreach { case (q, hits) => assert(hits === fresh.search(q, k), s"$label q=$q") }
+    }
+    check("v0")
+    upsert((2L, "s0", Seq(0.5f, 0f))) // re-upsert an existing key
+    assert(check("re-upsert").count(_.id == 2L) === 1)
+    upsert((3L, "s0", Seq(0f, 1f))) // same id, other shard: both survive
+    assert(check("other shard").count(_.id == 3L) === 2)
+    checkEventual("eventual v0 → v2")
+    delete((99L, "s1"), (2L, "s1")) // keys that match no row
+    assert(check("missing keys").size === 7)
+    // a key repeated inside one upsert appends every row; a null shard
+    // key is appended but never matches
+    upsert((10L, "s1", Seq(1f, 1f)), (10L, "s1", Seq(1f, 2f)), (11L, null, Seq(3f, 3f)))
+    assert(check("repeated key").count(_.id == 10L) === 2)
+    // two writes between lookups: the handle applies a chain of deltas
+    delete((10L, "s1"), (6L, null), (11L, null))
+    upsert((1L, "s0", Seq(4f, 4f)), (12L, "s1", Seq(0.1f, 0.1f)))
+    val last = check("chain")
+    assert(last.count(_.id == 10L) === 0) // both duplicates removed
+    assert(last.count(_.id == 6L) === 1 && last.count(_.id == 11L) === 1) // null keys kept
+    checkEventual("eventual v2 → v6")
+    // batchSearch misses served from the delta-built slot, no job
+    val batchK = 4 // not cached by check()
+    val (jobs, batch) = jobsOf(svc.batchSearch(queries.map(BatchQuery(_, batchK, Strong))).toOption.get)
+    assert(jobs === 0)
+    val fresh = svc.residentLoop().get
+    assert(batch.map(_._1) === queries.map(fresh.search(_, batchK)))
+  }
+
+  test("seeded random writes: the delta-built copy ≡ a fresh open after each write") {
+    val rnd = new scala.util.Random(17)
+    def vec() = Seq(rnd.nextInt(5).toFloat, rnd.nextInt(5).toFloat)
+    def key() = (rnd.nextInt(6).toLong, Seq("s0", "s1", null)(rnd.nextInt(3)))
+    val svc = new SearchService(rowsDF((0 until 8).map(i => (i.toLong, s"s${i % 2}", vec())): _*))
+    val handle = svc.residentServing()
+    for (step <- 1 to 12) {
+      if (rnd.nextBoolean()) svc.upsert(rowsDF(Seq.fill(1 + rnd.nextInt(3)) {
+        val (id, shard) = key(); (id, shard, vec())
+      }: _*))
+      else svc.delete(keysDF(Seq.fill(1 + rnd.nextInt(3))(key()): _*))
+      if (step % 4 == 0) svc.warm() // keeps the plan chain short
+      val q = vec()
+      assert(handle.search(q, 50) === svc.residentLoop().map(_.search(q, 50)), s"step $step")
+    }
+  }
+
+  test("writes a loaded copy cannot take fall back to a full open with the same result") {
+    val base = rowsDF((1L, "s0", Seq(0f, 0f)), (2L, "s0", Seq(1f, 0f)), (3L, "s1", Seq(2f, 2f)))
+    val q = Seq(0f, 0f)
+    /** The handle's answer after `write`, next to a full open's. */
+    def after(write: SearchService => Unit, svc: SearchService = new SearchService(base)) = {
+      val handle = svc.residentServing()
+      write(svc)
+      (handle.search(q, 10), svc.residentLoop().map(_.search(q, 10)))
+    }
+    // updates the resident path cannot load: None, as open gives
+    val nullElement = spark.sql("SELECT CAST(7 AS BIGINT) AS id, 's0' AS shard_id, " +
+      "array(CAST(1.0 AS FLOAT), CAST(NULL AS FLOAT)) AS embedding")
+    for ((label, up) <- Seq(
+        "null embedding" -> rowsDF((7L, "s0", null)),
+        "null element" -> nullElement,
+        "wrong dimension" -> rowsDF((7L, "s0", Seq(1f, 2f, 3f))),
+        "array<double>" -> Seq((7L, "s0", Seq(1.0, 2.0))).toDF("id", "shard_id", "embedding"))) {
+      assert(after(_.upsert(up)) === (None, None), label)
+    }
+    // a delete that empties the corpus; a later upsert loads again
+    val emptied = new SearchService(base)
+    assert(after(_.delete(keysDF((1L, "s0"), (2L, "s0"), (3L, "s1"))), emptied) === (None, None))
+    val refilled = after(_.upsert(rowsDF((9L, "s1", Seq(1f, 1f)))), emptied)
+    assert(refilled._1.get.map(_.id) === Seq(9L) && refilled._1 === refilled._2)
+    // an upsert that pushes the copy past the residency cap
+    sys.props("graft.serveLoopMaxRows") = "3"
+    try assert(after(_.upsert(rowsDF((8L, "s0", Seq(5f, 5f))))) === (None, None))
+    finally sys.props -= "graft.serveLoopMaxRows"
+    // more writes than maxSnapshots: the first delta was pruned, so the
+    // handle reopens with a full open of the target plan (a Spark job)
+    val pruned = new SearchService(base, maxSnapshots = 2)
+    val handle = pruned.residentServing()
+    (1 to 3).foreach(i => pruned.upsert(rowsDF((20L + i, "s0", Seq(0f, 0.1f * i)))))
+    val (jobs, hits) = jobsOf(handle.search(q, 10))
+    assert(jobs > 0)
+    assert(hits === pruned.residentLoop().map(_.search(q, 10)))
+    assert(hits.get.map(_.id).take(4) === Seq(1L, 21L, 22L, 23L))
+  }
+
+  test("a reopen after a write from a local collection submits no Spark job") {
+    val svc = freshService
+    val handle = svc.residentServing()
+    svc.upsert(rowsDF((9L, "s0", Seq(0f, 0.1f))))
+    // a full open of the new version's plan needs a job ...
+    assert(jobsOf(svc.residentLoop())._1 > 0)
+    // ... the handle's reopen applies the upsert to its copy without one
+    val (jobs, hits) = jobsOf(handle.search(Seq(0f, 0f), 2))
+    assert(jobs === 0)
+    assert(hits.get.map(_.id) === Seq(1L, 9L))
+    svc.delete(keysDF((1L, "s0")))
+    val (delJobs, afterDelete) = jobsOf(handle.search(Seq(0f, 0f), 2))
+    assert(delJobs === 0)
+    assert(afterDelete.get.map(_.id) === Seq(9L, 2L))
+  }
+
+  test("maxSnapshots must keep the current version") {
+    val e = intercept[IllegalArgumentException](new SearchService(
+      rowsDF((1L, "s0", Seq(0f, 0f))), maxSnapshots = 0))
+    assert(e.getMessage.contains("maxSnapshots"))
+    // 1 retains only the current version: reads after writes still serve
+    val one = new SearchService(rowsDF((1L, "s0", Seq(0f, 0f))), maxSnapshots = 1)
+    one.upsert(rowsDF((2L, "s0", Seq(0f, 0.5f))))
+    one.delete(keysDF((1L, "s0")))
+    assert(one.search(Seq(0f, 0f), 2)._1.map(_.id) === Seq(2L))
+    assert(one.residentServing().search(Seq(0f, 0f), 2).get.map(_.id) === Seq(2L))
+  }
+
   test("delete removes from results after invalidation") {
     val svc = freshService
     svc.delete(Seq((1L, "s0")).toDF("id", "shard_id"))
