@@ -282,11 +282,14 @@ final class SearchService(
     * is built from the newer of `held` and the slot when its snapshot
     * is older than the target and every write in between is still
     * recorded: [[ServeLoop.applyWrites]] applies them in order to the
-    * loaded rows, and a write from a local collection needs no Spark
-    * job. It falls back to a full [[ServeLoop.open]] of the target plan
-    * when no such copy exists (a write was pruned, the target is older
-    * than the copies) or the delta cannot decide (see applyWrites);
-    * both give the same copy up to row order. Resolves under ONE
+    * loaded rows without a Spark job. Only writes built from a local
+    * collection apply this way; running the lineage of any other write
+    * again could give rows other than the warmed snapshot's. It falls
+    * back to a full [[ServeLoop.open]] of the target plan when no such
+    * copy exists (a write was pruned, the target is older than the
+    * copies) or the delta cannot decide (a write that is not a local
+    * collection, and the other cases applyWrites lists); both give the
+    * same copy up to row order. Resolves under ONE
     * service lock: a second resolution lets a concurrent [[warm]] take
     * the lock in between, which moves the reopen behind the warm from
     * one write to the next. Serialized: concurrent handles wanting the
@@ -359,8 +362,10 @@ final class SearchService(
   * the old snapshot until its staleness window lapses or [[refresh]]).
   * A reopen builds the new copy from the held one plus the recorded
   * writes in between, so a write from a local collection becomes
-  * visible without a Spark job; SearchServiceSpec pins that copy ≡ a
-  * fresh [[SearchService.residentLoop]] at every version.
+  * visible without a Spark job; a write built from a Spark query takes
+  * a full reopen, which reads the warmed snapshot rather than running
+  * the write's lineage again. SearchServiceSpec pins both ≡ a fresh
+  * [[SearchService.residentLoop]] and ≡ [[SearchService.search]].
   * Thread-safe: reopen is serialized, lookups race it benignly (they
   * serve either the old or the new loop — both are valid serves of
   * their own snapshot; STRONG lookups re-check before every scan). */

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
@@ -232,7 +233,7 @@ final class ServeLoop private[operators] (
   private[operators] def keyed: Boolean = shards != null
 
   /** This copy with one write applied (see [[ServeLoop.applyWrites]],
-    * which checks the column types first); None when the write cannot
+    * which checks the write's plan and column types first); None when the write cannot
     * be applied to a loaded copy. */
   private[operators] def applyWrite(w: ServeLoop.Write, embCol: String): Option[ServeLoop] = {
     val cols = Seq(col(ServeLoop.ShardCol), col("id").cast("long")) ++
@@ -414,39 +415,41 @@ object ServeLoop {
     * rows included; null keys never match), then an upsert's rows are
     * appended (keys repeated inside one upsert all append). Kept rows
     * copy in runs. Each write collects with `limit(size + 1)`, a delete
-    * only its keys; a write built from a local collection collects
-    * without a Spark job.
+    * only its keys.
+    *
+    * Only writes built from a local collection apply: their rows come
+    * from the driver without a Spark job and are the rows the target
+    * plan holds. Any other write would run its lineage again, which
+    * costs a job and can give rows other than the ones the target plan
+    * holds (a source rewritten since the write, a nondeterministic
+    * expression), while `open` reads the target plan [[SearchService.warm]]
+    * persisted.
     *
     * Returns Some(result), where result is None exactly when `open`
     * would give None for an empty or over-cap copy; None when the
     * delta cannot decide and the caller must run `open(target)`:
     * `base` has no shard codes, `idCol` is not `id`, the target's
-    * embedding is not array<float>, a `shard_id` is not a string or an
-    * `id` not an integer type, a write has more rows than the copy, or
-    * an upserted row has a null id, a null embedding, a null element or
-    * the wrong dimension. Row order differs from `open`'s, which no
-    * result sees: every ranking is by (distance, id). */
+    * embedding is not array<float>, a write is not a local collection,
+    * a `shard_id` is not a string or an `id` not an integer type, a
+    * write has more rows than the copy, or an upserted row has a null
+    * id, a null embedding, a null element or the wrong dimension. Row
+    * order differs from `open`'s, which no result sees: every ranking
+    * is by (distance, id). */
   private[operators] def applyWrites(base: ServeLoop, writes: Seq[Write],
-      target: DataFrame, idCol: String, embCol: String,
-      cap: Int = maxRows): Option[Option[ServeLoop]] = {
+      target: DataFrame, idCol: String, embCol: String): Option[Option[ServeLoop]] = {
     def typeOf(df: DataFrame, name: String): Option[DataType] =
       df.schema.find(_.name == name).map(_.dataType)
     // the key types whose equality is the anti-join's
     def keyTypes(df: DataFrame): Boolean =
       typeOf(df, ShardCol).contains(StringType) &&
         typeOf(df, "id").exists(Seq(ByteType, ShortType, IntegerType, LongType).contains)
+    def applicable(w: Write): Boolean =
+      w.rows.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] && keyTypes(w.rows) &&
+        (!w.upsert || typeOf(w.rows, embCol).exists(isFloatArray))
     if (!base.keyed || idCol != "id" || !keyTypes(target) ||
-        !typeOf(target, embCol).exists(isFloatArray)) return None
-    var cur = base
-    val it = writes.iterator
-    while (it.hasNext) {
-      val w = it.next()
-      if (!keyTypes(w.rows) || (w.upsert && !typeOf(w.rows, embCol).exists(isFloatArray)))
-        return None
-      cur = cur.applyWrite(w, embCol).getOrElse(return None)
-    }
-    val capc = clampCap(cap)
-    Some(if (cur.size == 0 || cur.size > capc) None else Some(cur))
+        !typeOf(target, embCol).exists(isFloatArray) || !writes.forall(applicable)) return None
+    writes.foldLeft(Option(base))((cur, w) => cur.flatMap(_.applyWrite(w, embCol)))
+      .map(cur => if (cur.size == 0 || cur.size > clampCap(maxRows)) None else Some(cur))
   }
 
   private val ShardCol = "shard_id"

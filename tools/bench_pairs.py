@@ -22,6 +22,7 @@ writes every run's result as JSON.
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -32,12 +33,17 @@ def sh(cmd, cwd, **kw):
 
 
 def export(root, rev, dest):
-    """`git archive` of `rev` into `dest` (reused when already there)."""
+    """`git archive` of `rev` into `dest` (reused when already there).
+
+    A `dest` holding another export is deleted first, so files only that
+    export had do not end up in the build."""
     marker = os.path.join(dest, ".exported-rev")
     sha = sh(["git", "rev-parse", rev], root, capture_output=True, text=True).stdout.strip()
     if os.path.exists(marker) and open(marker).read().strip() == sha:
         return sha
-    os.makedirs(dest, exist_ok=True)
+    if os.path.exists(dest):
+        shutil.rmtree(dest)
+    os.makedirs(dest)
     archive = subprocess.Popen(["git", "archive", sha], cwd=root, stdout=subprocess.PIPE)
     sh(["tar", "-x", "-C", dest], root, stdin=archive.stdout)
     if archive.wait() != 0:
